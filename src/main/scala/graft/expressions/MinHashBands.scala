@@ -28,10 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * formula matches byte-for-byte on the internal < 2³⁰ domain;
   * out-of-domain bigint callers must apply the same `((h % P) + P)
   * % P` pre-reduction on the oracle side. Band keys are rendered
-  * directly as `"b:s:s"` — byte-identical to
-  * [[graft.operators.Dedup.bandColsFromSigs]]'s `concat_ws` keys, the
-  * ONE band-key definition shared with the batch signing path (pinned
-  * in `StreamingDedupSpec` and `MinHashBandsSpec`).
+  * directly as `"b:s:s"` — byte-identical to the `concat_ws` keys of
+  * a `min(seeded(h,i))` signature groupBy, the ONE band-key definition
+  * shared by the batch and streaming paths (pinned in
+  * `StreamingDedupSpec` and `MinHashBandsSpec`).
   *
   * Accepts array<int> (the shingle sets' storage type) or
   * array<bigint> (caller-supplied hash arrays) — elements promote to

@@ -367,10 +367,12 @@ object CorpusStats {
   def langClassifyWith(docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame, n: Int = 3): DataFrame = {
     require(n >= 1, s"n=$n")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val totals = model.groupBy(col("lang")).agg(sum(col("n")).as("t"))
-      .as[(String, Long)].collect().toMap // model-bounded: |languages|
+    val totals = model.groupBy(col("lang")).agg(sum(col("n").cast("long")))
+      .collect().map { r =>
+        require(!r.isNullAt(0), "langClassifyWith: model column lang is NULL")
+        require(!r.isNullAt(1), "langClassifyWith: model column n is NULL")
+        r.getString(0) -> r.getLong(1)
+      }.toMap // model-bounded: |languages|
     require(totals.nonEmpty, "langClassifyWith: empty model")
     // lang values become PIVOT COLUMN NAMES, i.e. part of the
     // unresolved-attribute namespace: a backtick (or other hostile
@@ -402,6 +404,8 @@ object CorpusStats {
       org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
     model.select(col("lang"), col("gram"), col("n").cast("long")).collect()
       .foreach { r =>
+        require(!r.isNullAt(1), "langClassifyWith: model column gram is NULL")
+        require(!r.isNullAt(2), "langClassifyWith: model column n is NULL")
         val i = langIdx(r.getString(0))
         val g = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1))
         var a = gramMap.get(g)
@@ -813,73 +817,35 @@ object CorpusStats {
     * they are the model's geometry, exactly like a tokenizer's merge
     * list.
     *
-    * Scale shape: ×depth explode of the PROBE table (usually
-    * vocab-sized or a handful of lookups), one equi-join against the
-    * `depth·width`-row sketch — Spark broadcasts it — and a per-token
-    * min. The corpus is never touched.
+    * Scale shape: map-only. The sketch — bounded at depth·width
+    * counters by construction, count-min's whole contract — is
+    * COLLECTED once and `est(t)` evaluates per probe row inside the
+    * compiled [[graft.expressions.CountMinEstimate]] kernel: no ×depth
+    * explode, no join, no re-aggregation, and the corpus is never
+    * touched. A NULL probe token estimates 0. Duplicate (d, bucket)
+    * sketch rows sum, the additive [[mergeStats]] reading; rows
+    * outside the declared geometry, and NULL `d`/`bucket`/`n` cells,
+    * fail loudly (a foreign sketch must never silently mis-bucket).
     *
     * @param tokens probe table; `tokenCol` is consumed, other columns
-    *               pass through untouched. The output is DISTINCT over
-    *               the input columns (the per-token min groups by all
-    *               of them), so duplicate probe rows collapse to one
-    *               output row — pass a surrogate key column if row
-    *               multiplicity matters. Column names `__d`, `__bucket`
-    *               and `__n` are reserved for the internal probe join
+    *               pass through untouched. Returns ONE output row per
+    *               probe row — duplicate probe rows stay duplicated.
+    *               The column name `n_est` is reserved for the output
     *               and rejected loudly.
     * @return input columns + (n_est: long)
     */
   def countMinEstimateWith(tokens: DataFrame, tokenCol: String,
       sketch: DataFrame, depth: Int, width: Int): DataFrame = {
     require(depth >= 1 && width >= 2, s"countMinEstimateWith($depth, $width)")
-    // n_est is reserved too: the probe's pass-through columns are the
-    // groupBy keys, so an input n_est would silently duplicate the
-    // output column name and break every downstream reference by name
-    val reserved = Set("__d", "__bucket", "__n", "n_est")
-    val clash = tokens.columns.filter(reserved)
-    require(clash.isEmpty,
-      s"countMinEstimateWith: probe columns ${clash.mkString(",")} clash " +
-        "with reserved names (__d, __bucket, __n, n_est) - rename them")
-    val passThrough = tokens.columns.toSeq
-    val base = H.md5Mod(col(tokenCol))
-    tokens
-      .select(passThrough.map(col) :+ posexplode(array(
-        (0 until depth).map(i => H.seeded(base, i) % width): _*))
-        .as(Seq("__d", "__bucket")): _*)
-      .join(sketch.select(col("d").as("__d"), col("bucket").as("__bucket"),
-        col("n").as("__n")), Seq("__d", "__bucket"), "left")
-      .groupBy(passThrough.map(col): _*)
-      .agg(min(coalesce(col("__n"), lit(0L))).as("n_est"))
-  }
-
-  /** MAP-ONLY [[countMinEstimateWith]] (round 18): the sketch —
-    * bounded at depth·width counters by construction, count-min's
-    * whole contract — is COLLECTED once (same bounded footprint the
-    * broadcast hash relation cost) and `est(t)` evaluates per probe
-    * row inside the compiled [[graft.expressions.CountMinEstimate]]
-    * kernel: no ×depth explode, no join, and no re-aggregation — the
-    * probe table paid a vocab-sized exchange there just to regroup its
-    * own rows. Absent counters read 0 via the array default, exactly
-    * like the left join's coalesce; a NULL probe token estimates 0,
-    * like the old all-NULL-bucket group.
-    *
-    * UNLIKE [[countMinEstimateWith]] this does NOT collapse duplicate
-    * probe rows (map-only: one output row per input row); every
-    * in-repo consumer probes an already-aggregated (hence distinct)
-    * token table, where the two forms are identical — oracle-pinned
-    * through x_sketch_countmin / x_sketch_heavy / x_sketch_heavy_stream.
-    * Duplicate (d, bucket) sketch rows sum, the additive
-    * [[mergeStats]] reading; rows outside the declared geometry fail
-    * loudly (a foreign sketch must never silently mis-bucket).
-    */
-  def countMinEstimateMapOnly(tokens: DataFrame, tokenCol: String,
-      sketch: DataFrame, depth: Int, width: Int): DataFrame = {
-    require(depth >= 1 && width >= 2, s"countMinEstimateMapOnly($depth, $width)")
     require(!tokens.columns.contains("n_est"),
-      "countMinEstimateMapOnly: probe column n_est clashes with the output")
+      "countMinEstimateWith: probe column n_est clashes with the output")
     val counters = new Array[Long](depth * width)
     sketch.select(col("d").cast("int"), col("bucket").cast("long"),
         col("n").cast("long")).collect()
       .foreach { r =>
+        require(!r.isNullAt(0), "countMinEstimateWith: sketch column d is NULL")
+        require(!r.isNullAt(1), "countMinEstimateWith: sketch column bucket is NULL")
+        require(!r.isNullAt(2), "countMinEstimateWith: sketch column n is NULL")
         val (d, b) = (r.getInt(0), r.getLong(1))
         require(d >= 0 && d < depth && b >= 0 && b < width,
           s"sketch row outside geometry depth=$depth width=$width: d=$d bucket=$b")
@@ -930,11 +896,7 @@ object CorpusStats {
   def heavyHittersWithCounts(tokCnt: DataFrame, sketch: DataFrame,
       depth: Int, width: Int, threshold: Long): DataFrame = {
     require(threshold >= 1, s"threshold=$threshold")
-    // map-only screen (round 18): the input is an aggregated (token, n)
-    // table — distinct by construction — so the collapsing join form
-    // and the compiled-kernel form are identical, minus one vocab-sized
-    // exchange and the ×depth explode
-    countMinEstimateMapOnly(tokCnt, "token", sketch, depth, width)
+    countMinEstimateWith(tokCnt, "token", sketch, depth, width)
       .where(col("n_est") >= threshold && col("n") >= threshold)
       .select(col("token"), col("n"))
   }
@@ -969,9 +931,9 @@ object CorpusStats {
     * map-side with the broadcast candidate list) but never shuffled,
     * and the batch pays one O(batch) aggregate.
     *
-    * REGIME BOUND, probed (`tools/HeavySliverProbe`,
-    * `bench_evidence/r15_heavy_sliver_probe.txt`): the sliver shape
-    * above holds while the candidate list broadcasts. An adversarially
+    * REGIME BOUND, probed (`bench_evidence/r15_heavy_sliver_probe.txt`;
+    * source: `git show a616db1:src/main/scala/graft/tools/HeavySliverProbe.scala`):
+    * the sliver shape above holds while the candidate list broadcasts. An adversarially
     * LOW threshold makes the candidate set approach the vocabulary —
     * at a planted 22M-candidate point (every history token heavy) AQE
     * re-plans every semi-join as an ordinary shuffled join, which
@@ -1006,9 +968,7 @@ object CorpusStats {
       history: DataFrame, sketch: DataFrame, depth: Int, width: Int,
       threshold: Long): DataFrame = {
     require(threshold >= 1, s"threshold=$threshold")
-    // map-only screen (round 18): `batch` is an aggregated (token, n)
-    // table — see heavyHittersWithCounts
-    val batchCands = countMinEstimateMapOnly(batch, "token", sketch,
+    val batchCands = countMinEstimateWith(batch, "token", sketch,
         depth, width)
       .where(col("n_est") + col("n") >= threshold)
       .select(col("token"))

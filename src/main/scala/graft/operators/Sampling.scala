@@ -604,6 +604,7 @@ object Sampling {
     model.select(col("bucket").cast("long"), col("tgt_n").cast("long"),
         col("raw_n").cast("long")).collect()
       .foreach { r =>
+        require(!r.isNullAt(0), "dsirWeightsWith: model column bucket is NULL")
         val b = r.getLong(0)
         require(seen.add(b),
           s"dsirWeightsWith: duplicate bucket $b in model (the join form " +

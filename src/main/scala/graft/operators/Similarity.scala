@@ -230,7 +230,9 @@ object Similarity {
     * bit-for-bit, which is fine for a quantizer. Exemplar books are
     * near-random cuts of the space; on clustered corpora training
     * moves them onto the data manifold and is what makes the ADC
-    * shortlist usable (measured in tools/PqProbe). Train on a
+    * shortlist usable (measured by the PQ probe,
+    * `bench_evidence/r10_rerank_probe_sf100e.txt`; source:
+    * `git show a616db1:src/main/scala/graft/tools/PqProbe.scala`). Train on a
     * [[Sampling.deterministicKeep]] sample at scale — quality needs a
     * sample, not the corpus.
     *
@@ -361,7 +363,9 @@ object Similarity {
   }
 
   /** Shortlist-rerank ANN — the deployment shape the PQ probes
-    * motivate (tools/PqProbe: raw ADC ranks cannot separate top-10 of
+    * motivate (`bench_evidence/r10_rerank_probe_sf100e.txt`; source:
+    * `git show a616db1:src/main/scala/graft/tools/RerankProbe.scala`:
+    * raw ADC ranks cannot separate top-10 of
     * a tight cluster, but an R = 100·k ADC shortlist recalls it):
     * the compressed ADC scan produces `shortK` candidates per query,
     * and the EXACT cosine re-scores only those — so full-precision

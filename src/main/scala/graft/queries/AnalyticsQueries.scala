@@ -234,7 +234,9 @@ object AnalyticsQueries {
     * the dedup hash only ever sees one partition's share
     * (rows/partitions, AQE-sized), bounded at any scale; the dedup and
     * the final count then run post-shuffle where each pair occurs in
-    * exactly one task. Probe-measured (tools/DistinctProbe, n≥2 warm):
+    * exactly one task. Probe-measured (DistinctProbe, n≥2 warm;
+    * SCALING.md; source:
+    * `git show a616db1:src/main/scala/graft/tools/DistinctProbe.scala`):
     * sf10 8.4–15.4 s → 6.7–8.8 s; sf30 34.4–37.0 s → 27.4–28.3 s
     * (and 22.5 s at an explicit width of 256 — left to AQE here
     * because a hard-coded width is a local[32] artifact, while the

@@ -427,11 +427,7 @@ object ExtensionQueries {
       parts, Seq("d", "bucket"), Seq("n"))
     val exact = byBatch.groupBy(col("token"))
       .agg(sum(col("n")).as("n_exact"))
-    // map-only estimate (round 18): `exact` is token-grouped (distinct),
-    // so the compiled-kernel form ([[CorpusStats.countMinEstimateMapOnly]])
-    // is identical to the collapsing join form, minus one vocab-sized
-    // exchange and the ×depth explode
-    graft.operators.CorpusStats.countMinEstimateMapOnly(
+    graft.operators.CorpusStats.countMinEstimateWith(
         exact, "token", sketch, depth, width)
       .select(col("token"), col("n_est"), col("n_exact"))
       .orderBy("token")
@@ -1387,7 +1383,10 @@ object ExtensionQueries {
   /** Containment (overlap-coefficient) dedup over a corpus with
     * PLANTED excerpts: every 7th document re-appears under a shifted
     * id as its first max(⌊tokens/2⌋, 6) tokens. The shift is
-    * 10 000 000 (ContainmentProbe's convention) — past the doc_id
+    * 10 000 000 (the containment probe's convention,
+    * `bench_evidence/r9_containment_probe_sf10z_sf100z.txt`; source
+    * `git show a616db1:src/main/scala/graft/tools/ContainmentProbe.scala`)
+    * — past the doc_id
     * range of any gated corpus, so an excerpt row can never silently
     * merge with a real document (200 000 collided at the 500k-doc
     * decade). An excerpt's shingle

@@ -3,15 +3,16 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based cross-checks of the kernel helpers against
   * straightforward reference implementations — the kernels are
   * hand-rolled loops (merge scans, rolling folds, bit votes), exactly
-  * the code shape where off-by-ones hide. Pure JVM (no Spark session):
-  * hundreds of cases per property in milliseconds.
+  * the code shape where off-by-ones hide. Pure JVM: hundreds of cases
+  * per property in milliseconds. Only the model-collect guards at the
+  * end touch the shared Spark session, since the models those kernels
+  * fold are collected from DataFrames.
   */
-class KernelPropertySpec extends AnyFunSuite {
+class KernelPropertySpec extends graft.SparkSpec {
 
   private def check(name: String, prop: Prop): Unit = {
     val res = SCTest.check(
@@ -207,5 +208,56 @@ class KernelPropertySpec extends AnyFunSuite {
     })
     assert(LangGuess.compute("") == "und")
     assert(LangGuess.compute("无论 the and of to") == "zh")
+  }
+
+  /** The model is rejected before any kernel runs, with a message
+    * naming the operator and the NULL column.
+    */
+  private def assertRejects(msg: String)(run: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](run)
+    assert(e.getMessage.contains(msg), s"expected '$msg', got: ${e.getMessage}")
+  }
+
+  test("LangGramHits model collect rejects NULL lang, gram and n rows") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "hello world")).toDF("doc_id", "text")
+    val ok = (Option("en"), Option("hel"), Option(1L))
+    def classify(rows: (Option[String], Option[String], Option[Long])*) =
+      graft.operators.CorpusStats.langClassifyWith(docs, "doc_id", "text",
+        rows.toDF("lang", "gram", "n"))
+    assertRejects("langClassifyWith: model column lang is NULL")(
+      classify(ok, (None, Some("wor"), Some(1L))))
+    assertRejects("langClassifyWith: model column gram is NULL")(
+      classify(ok, (Some("en"), None, Some(1L))))
+    assertRejects("langClassifyWith: model column n is NULL")(
+      classify(ok, (Some("en"), Some("wor"), None)))
+    assertRejects("langClassifyWith: model column n is NULL")(
+      classify((Some("en"), Some("hel"), None)))
+  }
+
+  test("CountMinEstimate sketch collect rejects NULL d, bucket and n rows") {
+    val s = spark
+    import s.implicits._
+    val probes = Seq("alpha").toDF("token")
+    def estimate(row: (Option[Int], Option[Long], Option[Long])) =
+      graft.operators.CorpusStats.countMinEstimateWith(probes, "token",
+        Seq(row).toDF("d", "bucket", "n"), 2, 4)
+    assertRejects("countMinEstimateWith: sketch column d is NULL")(
+      estimate((None, Some(1L), Some(3L))))
+    assertRejects("countMinEstimateWith: sketch column bucket is NULL")(
+      estimate((Some(0), None, Some(3L))))
+    assertRejects("countMinEstimateWith: sketch column n is NULL")(
+      estimate((Some(0), Some(1L), None)))
+  }
+
+  test("DsirMass model collect rejects a NULL bucket row") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "hello world")).toDF("doc_id", "text")
+    assertRejects("dsirWeightsWith: model column bucket is NULL")(
+      graft.operators.Sampling.dsirWeightsWith(docs, "doc_id", "text",
+        Seq((Option(1L), 2L, 3L), (None, 1L, 1L))
+          .toDF("bucket", "tgt_n", "raw_n"), buckets = 16))
   }
 }

@@ -1132,6 +1132,16 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(String, Long)].collect().head
     assert(unseen == (("neverseen", 0L)), s"got $unseen")
 
+    // one output row per probe row: a duplicated probe row stays
+    // duplicated (a distinct-collapsing estimator would return one)
+    val dup = graft.operators.CorpusStats.countMinEstimateWith(
+        Seq("alpha", "alpha", "beta").toDF("token"), "token",
+        graft.operators.CorpusStats.countMinSketch(docs, "text", 3, 1024),
+        3, 1024)
+      .as[(String, Long)].collect().sorted.toSeq
+    assert(dup == Seq(("alpha", 3L), ("alpha", 3L), ("beta", 2L)),
+      s"got $dup")
+
     // heavy hitters: even a collision-saturated sketch (width 2 —
     // every estimate inflated) yields EXACTLY the true heavy set,
     // because the screen has no false negatives and the confirm pass
@@ -1142,12 +1152,12 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(hh == Seq(("alpha", 3L), ("beta", 2L)), s"got $hh")
 
-    // reserved probe-column names are rejected loudly, not shadowed
+    // the reserved output name is rejected loudly, not shadowed
     val clash = intercept[IllegalArgumentException] {
       graft.operators.CorpusStats.countMinEstimateWith(
-        Seq(("alpha", 1L)).toDF("token", "__bucket"), "token", tiny, 2, 2)
+        Seq(("alpha", 1L)).toDF("token", "n_est"), "token", tiny, 2, 2)
     }
-    assert(clash.getMessage.contains("__bucket"))
+    assert(clash.getMessage.contains("n_est"))
   }
 
   test("heavyHittersOverStream: whole-stream heavy set is exact from " +
@@ -1562,7 +1572,9 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("ivfPqTopK: residual-trained books hold the shortlist-recall floor " +
       "on a clustered corpus and do not lose to raw-vector PQ") {
-    // Deterministic 4-blob corpus (the regime tools/PqProbe measured:
+    // Deterministic 4-blob corpus (the regime the deleted PqProbe
+    // measured, bench_evidence/r10_rerank_probe_sf100e.txt; source:
+    // `git show a616db1:src/main/scala/graft/tools/PqProbe.scala`):
     // raw-vector books burn code entropy re-encoding cluster identity;
     // residual books see centered data). Pins the recall floor so
     // codebook-training changes can't silently degrade the ANN family.

@@ -344,8 +344,10 @@ class PlanAuditSpec extends SparkSpec {
     // Each pass must dedup POST-shuffle: an explicit repartition by the
     // (group, value) pair feeds the dedup aggregate, so no map-side
     // dedup hash absorbs a near-unique column's full input (the
-    // sf10→sf30 super-linear mechanism; tools/DistinctProbe measured
-    // the shapes). REPARTITION_BY_COL is that exchange's origin tag.
+    // sf10→sf30 super-linear mechanism; the deleted DistinctProbe
+    // measured the shapes, numbers in SCALING.md; source:
+    // `git show a616db1:src/main/scala/graft/tools/DistinctProbe.scala`).
+    // REPARTITION_BY_COL is that exchange's origin tag.
     assert(p.contains("REPARTITION_BY_COL"),
       s"per-column pass lost its explicit pair repartition:\n$p")
   }
@@ -376,9 +378,9 @@ class PlanAuditSpec extends SparkSpec {
     // The PK is near-unique (1-2 rows per key): a map-side partial agg
     // would hash nearly every scanned row for no reduction. The shipped
     // shape repartitions by the PK first so all dedup state lives in
-    // AQE-sized post-shuffle partitions (tools/DistinctProbe `dedup`
-    // mode measured the win at sf10 and sf30 — and measured the
-    // OPPOSITE for k5's collect_set, which is left two-phase).
+    // AQE-sized post-shuffle partitions (DistinctProbe `dedup` mode
+    // measured the win at sf10 and sf30 — and measured the OPPOSITE
+    // for k5's collect_set, which is left two-phase; SCALING.md).
     val p = plan("a4_dedup_by_pk")
     assert(p.contains("REPARTITION_BY_COL"),
       s"a4 lost its explicit PK repartition:\n$p")
@@ -566,7 +568,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("span df-thinning is skew-safe: partial-agged count, no window " +
       "operator holding a key's full occurrence list in one task") {
-    // round-14 conviction (ViralSkewProbe): count(1) over (partition
+    // round-14 conviction (bench_evidence/r14_viral_skew_probe.txt;
+    // source: `git show a616db1:src/main/scala/graft/tools/ViralSkewProbe.scala`):
+    // count(1) over (partition
     // by __h) OOMed its single hot task at a planted df of 10M. The
     // replacement counts via groupBy (map-side partial aggregation —
     // a viral key contributes ONE row per map task to the shuffle)
